@@ -5,6 +5,7 @@ import org.apache.avro.file.{CodecFactory, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 import scala.collection.JavaConverters._
@@ -253,19 +254,28 @@ object AvroGroupWriter {
     * order, directly at `<topicDir>/<epart>/<fname>`. Returns the manifest. */
   def write(df: DataFrame, epartCol: String, fnameCol: String,
             orderCol: String, payload: StructType, topicDir: String,
-            codec: Option[String]): Seq[IngestWriter.FileInfo] = {
+            codec: Option[String]): Seq[IngestWriter.FileInfo] =
+    writeGrouped(df.repartition(col(epartCol), col(fnameCol)), epartCol,
+      fnameCol, orderCol, payload, topicDir, codec)
+
+  /** [[write]] for a frame whose file groups already sit wholly inside one
+    * partition each (an assigned frame straight from the rotation window):
+    * only sorts within partitions, no exchange of its own. */
+  private[ingest] def writeGrouped(df: DataFrame, epartCol: String,
+                                   fnameCol: String, orderCol: String,
+                                   payload: StructType, topicDir: String,
+                                   codec: Option[String])
+      : Seq[IngestWriter.FileInfo] = {
     val avroSchemaJson = structToAvro(payload, "record").toString
     val hadoopConf = new org.apache.spark.util.SerializableConfiguration(
       df.sparkSession.sparkContext.hadoopConfiguration)
     val payloadFields = payload.fieldNames.toSeq
     val codecName = codec.getOrElse("null")
 
-    import org.apache.spark.sql.functions.col
     val arranged = df
-      .repartition(col(epartCol), col(fnameCol))
       .sortWithinPartitions(col(epartCol), col(fnameCol), col(orderCol))
 
-    val infos = arranged.toDF().rdd.mapPartitions { rows =>
+    val infos = arranged.mapPartitions { rows =>
       val schema = new Schema.Parser().parse(avroSchemaJson)
       val fs = FileSystem.get(new java.net.URI(topicDir),
         hadoopConf.value)
@@ -299,7 +309,8 @@ object AvroGroupWriter {
         out.iterator
       }
       result
-    }.collect().toSeq
+    }(org.apache.spark.sql.Encoders.product[IngestWriter.FileInfo])
+      .collect().toSeq
 
     infos.sortBy(f => (f.encodedPartition, f.fileName))
   }

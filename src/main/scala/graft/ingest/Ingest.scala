@@ -119,34 +119,36 @@ object Ingest {
     }
     val labeledGroups = timeGroup ++ extraCauseGroups
     val extraGroups = labeledGroups.map(_._2)
-    // manifest stats and per-cause diagnostics re-traverse the batch after
-    // the write; without a persist each extra pass re-reads the SOURCE
-    // (in foreachBatch the batch is a plan over source files, not
-    // materialized data) — at 100 TB that doubles micro-batch input I/O.
-    // Scoped: the cache lives exactly as long as the passes that share it
-    // — every action over it runs inside this block, so BATCH callers
-    // looping Ingest.run leak nothing and need no Caches.clear().
+    // ONE file-group assignment per micro-batch: every view, the manifest
+    // and the cause stats read it. With more than one consumer it is
+    // persisted — otherwise each consumer would redo the rotation window
+    // and re-read the SOURCE (in foreachBatch the batch is a plan over
+    // source files, not materialized data).
+    // Scoped: the caches live exactly as long as the passes that share
+    // them — every action over them runs inside this block, so BATCH
+    // callers looping Ingest.run leak nothing and need no Caches.clear().
+    val shared = cfg.writeKeys || cfg.writeHeaders || writeManifest ||
+      causeStats
     val (files, byCause) = graft.analytics.Caches.scoped {
-      val cached =
-        if (writeManifest || causeStats)
-          graft.analytics.Caches.persist(framed)
-        else framed
-      val written =
-        if (cfg.writeKeys || cfg.writeHeaders)
-          IngestWriter.writeKVH(cached, cfg, encoded, outDir, kafkaPartition,
-            offset, payloadCols, extraFileGroups = extraGroups)
-        else
-          IngestWriter.write(cached, cfg, encoded, outDir, kafkaPartition,
-            offset, payloadCols, extraFileGroups = extraGroups)
+      val assigned0 = IngestWriter.assign(framed, cfg, encoded,
+        kafkaPartition, offset, extraGroups)
+      val assigned =
+        if (shared) graft.analytics.Caches.persist(assigned0) else assigned0
+      val written = IngestWriter.writeViews(assigned, cfg, outDir,
+        kafkaPartition, offset, payloadCols)
+      // one row per file serves both the manifest and the cause stats
+      lazy val perFile = {
+        val p = CommitManifest.perFile(assigned, cfg, kafkaPartition, offset,
+          extraGroups)
+        if (writeManifest && causeStats) graft.analytics.Caches.persist(p)
+        else p
+      }
       val causes =
         if (causeStats)
-          RotationStats.causes(cached, cfg, encoded, kafkaPartition, offset,
-            labeledGroups)
+          RotationStats.causesOf(perFile, cfg, labeledGroups.map(_._1))
         else Map.empty[String, Long]
       fence.foreach { case (f, e) => f.check(e) }
-      if (writeManifest)
-        CommitManifest.write(cached, cfg, encoded, outDir, kafkaPartition,
-          offset, extraGroups)
+      if (writeManifest) CommitManifest.writePerFile(perFile, cfg, outDir)
       (written, causes)
     }
     val stats = RotationStats.of(files).copy(byCause = byCause)
@@ -170,7 +172,11 @@ object Ingest {
                offset: Column = col("offset"),
                payloadCols: Seq[Column],
                valueColumnForNulls: Option[String] = None,
-               writeManifest: Boolean = false): Map[String, Result] = {
+               writeManifest: Boolean = false,
+               extraCauseGroups: Seq[(String, Column)] = Nil,
+               causeStats: Boolean = false,
+               fence: Option[(EpochFence, Long)] = None)
+      : Map[String, Result] = {
     val topicVals = frame.select(topicCol.cast("string").as("t"))
       .distinct().collect().map(_.getString(0))
     // Kafka guarantees every record a topic; a null here means the routing
@@ -182,7 +188,7 @@ object Ingest {
     topics.map { t =>
       t -> run(frame.filter(topicCol === t), cfgFor(t), partitioner, outDir,
         kafkaPartition, offset, payloadCols, valueColumnForNulls,
-        writeManifest)
+        writeManifest, extraCauseGroups, causeStats, fence)
     }.toMap
   }
 }
@@ -276,33 +282,34 @@ object RotationStats {
   def causes(df: DataFrame, cfg: IngestConfig, encodedPartition: Column,
              kafkaPartition: Column, offset: Column,
              labeledGroups: Seq[(String, Column)]): Map[String, Long] = {
+    val groups = labeledGroups.map(_._2)
+    val assigned = IngestWriter.assign(df, cfg, encodedPartition,
+      kafkaPartition, offset, groups)
+    causesOf(CommitManifest.perFile(assigned, cfg, kafkaPartition, offset,
+      groups), cfg, labeledGroups.map(_._1))
+  }
+
+  /** [[causes]] over a [[CommitManifest.perFile]] frame whose `__g<i>`
+    * columns carry the group values labeled `labels(i)`. Like the manifest
+    * write, the classification runs in one task over the #files rows, so
+    * neither the window nor the count adds an exchange. */
+  private[ingest] def causesOf(perFile: DataFrame, cfg: IngestConfig,
+                               labels: Seq[String]): Map[String, Long] = {
     import org.apache.spark.sql.expressions.Window
-    val groupKey = Seq(kafkaPartition, encodedPartition) ++
-      labeledGroups.map(_._2)
-    val grouped = Rotation.assignSizeFiles(
-      df.withColumn("__epart", encodedPartition), struct(groupKey: _*),
-      offset, cfg.flushSize)
-    val gCols = labeledGroups.zipWithIndex.map { case ((_, c), i) =>
-      first(c).as(s"__g$i")
-    }
-    val perFile = grouped
-      .groupBy(kafkaPartition.as("__kp"), col("__epart"),
-        col(Rotation.StartOffsetCol))
-      .agg(count(lit(1)).as("__rc"), gCols: _*)
-    val w = Window.partitionBy(col("__kp"), col("__epart"))
-      .orderBy(col(Rotation.StartOffsetCol))
-    val withNext = labeledGroups.indices.foldLeft(
-      perFile.withColumn("__has_next",
-        lead(col(Rotation.StartOffsetCol), 1).over(w).isNotNull)) {
+    val w = Window.partitionBy(col("kafka_partition"),
+      col("encoded_partition")).orderBy(col("start_offset"))
+    val withNext = labels.indices.foldLeft(
+      perFile.coalesce(1).withColumn("__has_next",
+        lead(col("start_offset"), 1).over(w).isNotNull)) {
       case (acc, i) =>
         acc.withColumn(s"__n$i", lead(col(s"__g$i"), 1).over(w))
     }
-    val groupCause = labeledGroups.zipWithIndex.foldRight(
-      lit("partition_end"): Column) { case (((label, _), i), rest) =>
+    val groupCause = labels.zipWithIndex.foldRight(
+      lit("partition_end"): Column) { case ((label, i), rest) =>
       when(col("__has_next") &&
         !(col(s"__n$i") <=> col(s"__g$i")), lit(label)).otherwise(rest)
     }
-    val cause = when(col("__rc") === cfg.flushSize, lit("flush_size"))
+    val cause = when(col("record_count") === cfg.flushSize, lit("flush_size"))
       .otherwise(when(col("__has_next"), groupCause).otherwise(lit("batch_end")))
     withNext.select(cause.as("cause"))
       .groupBy("cause").agg(count(lit(1)).as("n"))
@@ -331,30 +338,43 @@ object RotationStats {
 object CommitManifest {
   def write(df: DataFrame, cfg: IngestConfig, encodedPartition: Column,
             outDir: String, kafkaPartition: Column, offset: Column,
-            extraGroups: Seq[Column]): String = {
-    val groupKey = Seq(kafkaPartition, encodedPartition) ++ extraGroups
-    val grouped = Rotation.assignSizeFiles(
-      df.withColumn("__epart", encodedPartition), struct(groupKey: _*),
-      offset, cfg.flushSize)
-    // per-object [min,max] of the configured stats columns ride the
-    // same aggregate — zero extra passes; the static double/string lane
-    // pair keeps the manifest schema identical across lakes with
-    // different stats configs
-    val statAggs = Seq(max(offset).as("end_offset"),
+            extraGroups: Seq[Column]): String =
+    writePerFile(perFile(IngestWriter.assign(df, cfg, encodedPartition,
+      kafkaPartition, offset, extraGroups), cfg, kafkaPartition, offset,
+      extraGroups), cfg, outDir)
+
+  /** One row per file of an [[IngestWriter.assign]]ed frame:
+    * `kafka_partition, encoded_partition, start_offset, end_offset,
+    * record_count`, the configured `col_stats`, and `__g<i>` = the value of
+    * `groups(i)` (constant within a file — it is part of the group key)
+    * for the cause stats. The per-object [min,max] of the stats columns
+    * ride the same aggregate — zero extra passes; the static
+    * double/string lane pair keeps the manifest schema identical across
+    * lakes with different stats configs. */
+  private[ingest] def perFile(assigned: DataFrame, cfg: IngestConfig,
+                              kafkaPartition: Column, offset: Column,
+                              groups: Seq[Column]): DataFrame = {
+    val aggs = Seq(max(offset).as("end_offset"),
       count(lit(1)).as("record_count")) ++
       (if (cfg.statsColumns.isEmpty) Nil
        else Seq(array(cfg.statsColumns.map(c =>
-         statStruct(df, c)): _*).as("col_stats")))
-    val stats = grouped
-      .groupBy(col("__epart").as("encoded_partition"),
-        kafkaPartition.as("kafka_partition"),
+         statStruct(assigned, c)): _*).as("col_stats"))) ++
+      groups.zipWithIndex.map { case (g, i) => first(g).as(s"__g$i") }
+    assigned
+      .groupBy(kafkaPartition.as("kafka_partition"),
+        col(IngestWriter.EpartCol).as("encoded_partition"),
         col(Rotation.StartOffsetCol).as("start_offset"))
-      .agg(statAggs.head, statAggs.tail: _*)
-      .withColumn("object_key", objectKey(col("encoded_partition"),
-        FileNaming.fileName(lit(cfg.topic), col("kafka_partition"),
-          col("start_offset"), cfg.extension, cfg.padWidth)))
-    writeStats(stats, s"$outDir/${cfg.topicsDir}/${cfg.topic}")
+      .agg(aggs.head, aggs.tail: _*)
   }
+
+  /** Write the manifest generation for a [[perFile]] frame. */
+  private[ingest] def writePerFile(perFile: DataFrame, cfg: IngestConfig,
+                                   outDir: String): String =
+    writeStats(perFile.withColumn("object_key",
+      objectKey(col("encoded_partition"),
+        FileNaming.fileName(lit(cfg.topic), col("kafka_partition"),
+          col("start_offset"), cfg.extension, cfg.padWidth))),
+      s"$outDir/${cfg.topicsDir}/${cfg.topic}")
 
   /** One configured column's per-object [min,max] stat struct: STRING
     * columns ride the string lanes (text lakes key on ids and
@@ -409,15 +429,18 @@ object CommitManifest {
       else stats.withColumn("col_stats",
         lit(null).cast("array<struct<c: string, lo: double, hi: double, " +
           "slo: string, shi: string>>"))
-    val ordered = withStats.orderBy(col("object_key"))
-    // to_json drops null fields, so stat-less lakes keep the original
-    // four-field line format
-    val jsonLines = ordered.select(to_json(struct(
-      col("object_key"), col("start_offset"), col("end_offset"),
-      col("record_count"), col("col_stats"))).as("value"))
+    // one part file sorted by key: the single writing task sorts (a
+    // global orderBy would add a range-sampling job and a shuffle only to
+    // be coalesced back into one partition). to_json drops null fields,
+    // so stat-less lakes keep the original four-field line format
+    val jsonLines = withStats.coalesce(1)
+      .sortWithinPartitions(col("object_key"))
+      .select(to_json(struct(
+        col("object_key"), col("start_offset"), col("end_offset"),
+        col("record_count"), col("col_stats"))).as("value"))
     val manifestDir = s"$topicDir/_graft_manifest"
     val tmp = s"$manifestDir/_tmp"
-    jsonLines.coalesce(1).write.mode("overwrite").text(tmp)
+    jsonLines.write.mode("overwrite").text(tmp)
     val conf = spark.sparkContext.hadoopConfiguration
     val tmpPath = new org.apache.hadoop.fs.Path(tmp)
     val fs = tmpPath.getFileSystem(conf)
@@ -430,8 +453,10 @@ object CommitManifest {
     // (keys are unique per batch, so no XOR self-cancellation) — two
     // batches share a name iff they vouch the same objects, which is
     // exactly the replay case.
+    // (coalesce(1): the global aggregate runs in the scan task, no
+    // exchange)
     val row = spark.read.schema(ManifestSchema)
-      .json(part.head.getPath.toString)
+      .json(part.head.getPath.toString).coalesce(1)
       .agg(min(col("start_offset")), max(col("end_offset")),
         bit_xor(xxhash64(col("object_key")))).head
     require(!row.isNullAt(0), "manifest stats are empty")

@@ -14,19 +14,23 @@ import org.apache.spark.sql.functions._
   *
   * Execution shape (scale-audited): ONE hash shuffle on
   * `(kafkaPartition, encodedPartition, extraGroups)` feeds both window
-  * functions (row_number + min-offset share partitioning) and the write —
-  * each file group lives wholly inside one task, so the dynamic-partition
-  * write emits exactly one part file per `(encodedPartition, fileName)` dir
-  * with no second exchange. The commit is a per-file rename, the same cost
-  * class as Hadoop's FileOutputCommitter v1 / S3A committers. Deterministic
-  * names make replay idempotent (X1).
+  * functions (row_number + min-offset share partitioning) — each file
+  * group lives wholly inside one task, so the dynamic-partition write
+  * emits exactly one part file per `(encodedPartition, fileName)` dir
+  * with no second exchange, and the direct-path Avro/ByteArray writers
+  * only sort within partitions. `Ingest.run` assigns file groups once per
+  * micro-batch: when the batch has more than one consumer (sidecar
+  * views, manifest, cause stats) the assigned frame is persisted and
+  * every view reads it. The commit is a per-file rename, the
+  * same cost class as Hadoop's FileOutputCommitter v1 / S3A committers.
+  * Deterministic names make replay idempotent (X1).
   */
 object IngestWriter {
 
   final case class FileInfo(encodedPartition: String, fileName: String,
                             path: String)
 
-  private val EpartCol = "__epart"
+  private[ingest] val EpartCol = "__epart"
   private val FnameCol = "__fname"
 
   /** Write `df` (must carry `kafkaPartition` and `offset` columns) as the
@@ -37,16 +41,38 @@ object IngestWriter {
             kafkaPartition: Column, offset: Column,
             payloadCols: Seq[Column],
             extraFileGroups: Seq[Column] = Nil,
-            extSuffix: String = ""): Seq[FileInfo] = {
-    val spark = df.sparkSession
-    val ext = extSuffix + cfg.extension
+            extSuffix: String = ""): Seq[FileInfo] =
+    writeAssigned(assign(df, cfg, encodedPartition, kafkaPartition, offset,
+      extraFileGroups), cfg, outDir, kafkaPartition, offset, payloadCols,
+      extSuffix)
 
+  /** The file-group assignment every view, the manifest and the cause
+    * stats derive from: adds `__epart` (the encoded partition),
+    * `_file_index` and `_file_start_offset` over the group key
+    * `(kafkaPartition, encodedPartition, extraFileGroups)`. The window
+    * hash-partitions on that key, so each file group lives wholly inside
+    * one partition of the result. */
+  private[ingest] def assign(df: DataFrame, cfg: IngestConfig,
+                             encodedPartition: Column, kafkaPartition: Column,
+                             offset: Column,
+                             extraFileGroups: Seq[Column]): DataFrame = {
     val groupKey = Seq(kafkaPartition, encodedPartition) ++ extraFileGroups
-    val grouped = Rotation.assignSizeFiles(
-      df.withColumn(EpartCol, encodedPartition),
+    Rotation.assignSizeFiles(df.withColumn(EpartCol, encodedPartition),
       struct(groupKey: _*), offset, cfg.flushSize)
+  }
 
-    val named = grouped.withColumn(
+  /** Write one view of an [[assign]]ed frame, persisted or not: its file
+    * groups sit wholly inside one partition each and a view only projects,
+    * so no writer shuffles again — the direct-path writers sort within
+    * partitions, the staged write's dynamic partitioning emits one part
+    * file per group. */
+  private[ingest] def writeAssigned(assigned: DataFrame, cfg: IngestConfig,
+                                    outDir: String, kafkaPartition: Column,
+                                    offset: Column, payloadCols: Seq[Column],
+                                    extSuffix: String): Seq[FileInfo] = {
+    val spark = assigned.sparkSession
+    val ext = extSuffix + cfg.extension
+    val named = assigned.withColumn(
       FnameCol,
       FileNaming.fileName(lit(cfg.topic), kafkaPartition,
         col(Rotation.StartOffsetCol), ext, cfg.padWidth))
@@ -72,8 +98,8 @@ object IngestWriter {
       val payloadSchema = org.apache.spark.sql.types.StructType(
         data.schema.fields.filterNot(f =>
           Set(EpartCol, FnameCol, "__offset").contains(f.name)))
-      return AvroGroupWriter.write(data, EpartCol, FnameCol, "__offset",
-        payloadSchema, s"$outDir/${cfg.topicsDir}/${cfg.topic}",
+      return AvroGroupWriter.writeGrouped(data, EpartCol, FnameCol,
+        "__offset", payloadSchema, s"$outDir/${cfg.topicsDir}/${cfg.topic}",
         cfg.compression)
     }
 
@@ -113,38 +139,45 @@ object IngestWriter {
     * and `.headers` files share the same basename per file group; key
     * non-null is enforced when keys are written (Utils.java:31-40 name
     * contract). Each sidecar view is written in its OWN configured format
-    * (`keys.format.class` / `headers.format.class`, default Avro) — the
-    * view's file group assignment is identical to the value view's (same
-    * group key, same flush.size), so lockstep holds across formats. */
+    * (`keys.format.class` / `headers.format.class`, default Avro) — every
+    * view names its files from the same group assignment, so lockstep
+    * holds across formats. This standalone entry recomputes the
+    * assignment per view; `Ingest.run` persists it once and shares it. */
   def writeKVH(df: DataFrame, cfg: IngestConfig, encodedPartition: Column,
                outDir: String, kafkaPartition: Column, offset: Column,
                valueCols: Seq[Column],
-               extraFileGroups: Seq[Column] = Nil): Seq[FileInfo] = {
-    // extraFileGroups (e.g. R2 time-rotation buckets) must thread through
-    // all three views so .keys/.headers stay in lockstep with the value
-    // files AND agree with the CommitManifest grouping
-    val value = write(df, cfg, encodedPartition, outDir, kafkaPartition,
-      offset, valueCols, extraFileGroups = extraFileGroups)
+               extraFileGroups: Seq[Column] = Nil): Seq[FileInfo] =
+    // extraFileGroups (e.g. R2 time-rotation buckets) are part of the one
+    // assignment all three views read, so .keys/.headers stay in lockstep
+    // with the value files AND agree with the CommitManifest grouping
+    writeViews(assign(df, cfg, encodedPartition, kafkaPartition, offset,
+      extraFileGroups), cfg, outDir, kafkaPartition, offset, valueCols)
+
+  /** The value view of an [[assign]]ed frame plus the configured `.keys`
+    * and `.headers` sidecars, all named from the same file groups. */
+  private[ingest] def writeViews(assigned: DataFrame, cfg: IngestConfig,
+                                 outDir: String, kafkaPartition: Column,
+                                 offset: Column, valueCols: Seq[Column])
+      : Seq[FileInfo] = {
+    def view(viewCfg: IngestConfig, payload: Seq[Column],
+             extSuffix: String): Seq[FileInfo] =
+      writeAssigned(assigned, viewCfg, outDir, kafkaPartition, offset,
+        payload, extSuffix)
+    val value = view(cfg, valueCols, "")
     val keys =
       if (!cfg.writeKeys) Nil
-      else write(
-        df.withColumn("key", when(col("key").isNull,
+      else view(cfg.copy(format = cfg.keyFormat),
+        Seq(struct(when(col("key").isNull,
             raise_error(lit("store.kafka.keys requires non-null keys")))
-          .otherwise(col("key"))),
-        cfg.copy(format = cfg.keyFormat), encodedPartition, outDir,
-        kafkaPartition, offset,
-        Seq(struct(col("key")).as("RecordKey")),
-        extraFileGroups = extraFileGroups, extSuffix = ".keys")
+          .otherwise(col("key")).as("key")).as("RecordKey")), ".keys")
     val headers =
       if (!cfg.writeHeaders) Nil
-      else write(df, cfg.copy(format = cfg.headerFormat), encodedPartition,
-        outDir, kafkaPartition, offset,
+      else view(cfg.copy(format = cfg.headerFormat),
         // P3 applies INSIDE the writer (RecordViews.java:106-110): values
         // stringify — so the verbatim Kafka-source binary header values
         // land as strings, and an already-string frame is unchanged
         Seq(RecordViews.stringifiedHeaders(col("headers")).as("headers")),
-        extraFileGroups = extraFileGroups,
-        extSuffix = ".headers")
+        ".headers")
     value ++ keys ++ headers
   }
 

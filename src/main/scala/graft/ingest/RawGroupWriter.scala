@@ -14,17 +14,21 @@ import org.apache.spark.sql.functions.col
   * bytes (what the reference's ByteArrayConverter passes through). */
 object RawGroupWriter {
 
-  def write(df: DataFrame, epartCol: String, fnameCol: String,
-            orderCol: String, valueCol: String, topicDir: String,
-            compression: Option[String],
-            separator: String): Seq[IngestWriter.FileInfo] = {
+  /** One object per (encodedPartition, fileName) group of `df`, whose
+    * groups must each sit wholly inside one partition (an
+    * `IngestWriter.assign`ed frame): only sorts within partitions. */
+  private[ingest] def write(df: DataFrame, epartCol: String,
+                            fnameCol: String, orderCol: String,
+                            valueCol: String, topicDir: String,
+                            compression: Option[String],
+                            separator: String)
+      : Seq[IngestWriter.FileInfo] = {
     val hadoopConf = new org.apache.spark.util.SerializableConfiguration(
       df.sparkSession.sparkContext.hadoopConfiguration)
     val sepBytes = separator.getBytes("UTF-8")
     val gzip = compression.contains("gzip")
 
     val arranged = df
-      .repartition(col(epartCol), col(fnameCol))
       .sortWithinPartitions(col(epartCol), col(fnameCol), col(orderCol))
 
     val infos = arranged.toDF().rdd.mapPartitions { rows =>

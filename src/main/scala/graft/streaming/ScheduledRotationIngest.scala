@@ -78,22 +78,27 @@ final class ScheduledRotationIngest(
         // trailing (count < flushSize) group per partition key, so
         // re-assigning groups over the full-rows subset reproduces the
         // identical file boundaries (groups fill from the lowest offset).
-        val encoded = PartitionerSpec.compile(partitioner, kafkaPartition)
-        val grouped = Rotation.assignSizeFiles(
-          all.withColumn("__epart", encoded),
-          struct(kafkaPartition, col("__epart")), offset, cfg.flushSize)
-        val wf = Window.partitionBy(kafkaPartition, col("__epart"),
-          col(Rotation.FileIndexCol))
-        val sized = grouped.withColumn(CntCol, count(lit(1)).over(wf))
-        val fullRows = sized.filter(col(CntCol) === cfg.flushSize)
-          .drop(CntCol, "__epart", Rotation.FileIndexCol,
-            Rotation.StartOffsetCol)
-        val tailRows = sized.filter(col(CntCol) < cfg.flushSize)
-          .drop(CntCol, "__epart", Rotation.FileIndexCol,
-            Rotation.StartOffsetCol)
-        val files = runWrite(fullRows)
-        replaceSpill(spark, fs, live, tailRows)
-        files
+        // `sized` feeds the emptiness check, the write and the spill:
+        // persisted once so the window (and the spill read) runs once.
+        graft.analytics.Caches.scoped {
+          val encoded = PartitionerSpec.compile(partitioner, kafkaPartition)
+          val grouped = Rotation.assignSizeFiles(
+            all.withColumn("__epart", encoded),
+            struct(kafkaPartition, col("__epart")), offset, cfg.flushSize)
+          val wf = Window.partitionBy(kafkaPartition, col("__epart"),
+            col(Rotation.FileIndexCol))
+          val sized = graft.analytics.Caches.persist(
+            grouped.withColumn(CntCol, count(lit(1)).over(wf)))
+          val fullRows = sized.filter(col(CntCol) === cfg.flushSize)
+            .drop(CntCol, "__epart", Rotation.FileIndexCol,
+              Rotation.StartOffsetCol)
+          val tailRows = sized.filter(col(CntCol) < cfg.flushSize)
+            .drop(CntCol, "__epart", Rotation.FileIndexCol,
+              Rotation.StartOffsetCol)
+          val files = runWrite(fullRows)
+          replaceSpill(spark, fs, live, tailRows)
+          files
+        }
       }
     committed
   }

@@ -208,6 +208,10 @@ object StreamingIngest {
                          payloadCols: Seq[Column],
                          valueColumnForNulls: Option[String] = None,
                          writeManifest: Boolean = false,
+                         extraCauseGroups: Seq[(String, Column)] = Nil,
+                         causeStats: Boolean = false,
+                         fence: Option[(graft.ingest.EpochFence, Long)] =
+                           None,
                          gates: Seq[Gates.Gate] = Nil,
                          trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
@@ -222,7 +226,10 @@ object StreamingIngest {
             kafkaPartition = kafkaPartition, offset = offset,
             payloadCols = payloadCols,
             valueColumnForNulls = valueColumnForNulls,
-            writeManifest = writeManifest)
+            writeManifest = writeManifest,
+            extraCauseGroups = extraCauseGroups,
+            causeStats = causeStats,
+            fence = fence)
         }
         ()
       }

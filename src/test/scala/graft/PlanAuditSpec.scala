@@ -912,4 +912,59 @@ class PlanAuditSpec extends SparkSuite {
     assert(i.contains("partial_count"),
       s"batch survivor groupBy lost map-side combine:\n$i")
   }
+
+  test("Ingest.run: the Avro sidecar writes read the shared file-group " +
+    "assignment with no exchange of their own, and the manifest stats " +
+    "write has no range exchange") {
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import org.apache.spark.sql.functions.col
+    val sc = spark.sparkContext
+    // (issuing program frame, plan) of every SQL execution Ingest.run starts
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+      (String, SparkPlanInfo)]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(
+          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart =>
+          val issuer = Option(x.details).getOrElse("").linesIterator
+            .map(_.trim).find(_.startsWith("graft.")).getOrElse("")
+          plans.add(issuer -> x.sparkPlanInfo)
+        case _ =>
+      }
+    }
+    val df = graft.ingest.IngestSpec.smallFilesBatch(spark)
+    val out = java.nio.file.Files.createTempDirectory("plan_ingest").toString
+    sc.addSparkListener(listener)
+    try graft.ingest.Ingest.run(df, graft.ingest.IngestSpec.smallFilesCfg,
+      graft.ingest.IngestSpec.SmallFilesPartitioner, out,
+      payloadCols = graft.ingest.IngestSpec.SmallFilesPayload,
+      valueColumnForNulls = Some("value"), writeManifest = true,
+      causeStats = true)
+    finally {
+      org.apache.spark.TestAccess.drainListeners(sc)
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val all = plans.asScala.toSeq
+    def nodes(p: SparkPlanInfo, intoCache: Boolean): Seq[SparkPlanInfo] =
+      p +: (if (!intoCache && p.nodeName == "InMemoryTableScan") Nil
+            else p.children.flatMap(nodes(_, intoCache)))
+    def show(p: SparkPlanInfo): String =
+      nodes(p, intoCache = true).map(_.simpleString).mkString("\n")
+
+    val avro = all.filter(_._1.startsWith("graft.ingest.AvroGroupWriter"))
+    assert(avro.size == 2, all.map(_._1))
+    avro.foreach { case (_, p) =>
+      val own = nodes(p, intoCache = false)
+      assert(own.exists(_.nodeName == "InMemoryTableScan"), show(p))
+      assert(!own.exists(_.nodeName.contains("Exchange")), show(p))
+    }
+    val manifest = all.filter(_._1.startsWith("graft.ingest.CommitManifest"))
+    assert(manifest.nonEmpty, all.map(_._1))
+    manifest.foreach { case (_, p) =>
+      assert(!nodes(p, intoCache = true)
+        .exists(_.simpleString.contains("rangepartitioning")), show(p))
+    }
+  }
 }

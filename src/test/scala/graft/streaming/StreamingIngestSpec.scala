@@ -952,6 +952,38 @@ class StreamingIngestSpec extends SparkSuite {
         s"tB=${nFiles("tB")}")
   }
 
+  test("multi-topic streaming pipeline honors the epoch fence: a stale " +
+    "writer generation fails its micro-batch before committing anything") {
+    val src = Files.createTempDirectory("mfence_src").toString
+    val out = Files.createTempDirectory("mfence_out").toString
+    val fence = new graft.ingest.EpochFence(
+      Files.createTempDirectory("mfence").toString,
+      spark.sparkContext.hadoopConfiguration)
+    val stale = fence.acquire()
+    fence.acquire() // a newer generation took over
+    Seq(("tA", 0, 0L, "a"), ("tB", 0, 1L, "b"))
+      .toDF("topic", "kafka_partition", "offset", "text")
+      .coalesce(1).write.mode("append").parquet(src)
+    val mschema = StructType(Seq(
+      StructField("topic", StringType),
+      StructField("kafka_partition", IntegerType),
+      StructField("offset", LongType),
+      StructField("text", StringType)))
+    val q = StreamingIngest.startPipelineMulti(
+      spark.readStream.schema(mschema).parquet(src), col("topic"),
+      t => IngestConfig(topic = t), PartitionerSpec.Default, out,
+      Files.createTempDirectory("mfence_ckpt").toString,
+      col("kafka_partition"), col("offset"),
+      payloadCols = Seq(col("offset"), col("text")),
+      fence = Some((fence, stale)))
+    val ex =
+      try intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        q.awaitTermination(60000))
+      finally q.stop()
+    assert(ex.getMessage.contains("zombie"), ex.getMessage)
+    assert(!new java.io.File(s"$out/topics").exists())
+  }
+
   test("firstWinsDedup: content-keyed custom state dedups across batches " +
     "with the min-id winner, schema passing through intact") {
     val src = Files.createTempDirectory("fw_src").toString
